@@ -39,46 +39,43 @@ class Engine:
 
         register_dialect_shims(spark)
 
-    # ---- registration (steps 3) ----
+    # ---- registration + analysis (steps 3–4) ----
 
-    def _register_tables(self, sql: str) -> str:
+    def _sql(self, sql: str) -> DataFrame:
+        """Bind each distinct source of a DML statement once — path
+        factors to fresh temp views, the remaining names from the
+        catalog — then hand the statement to Catalyst."""
         rewritten, path_map = rewrite_path_tables(sql)
         for temp_name, path in path_map.items():
             register_path(self.spark, temp_name, path)
             # TEMP rows persist in the catalog like the reference
             self.catalog.create_table(temp_name, path, type_="TEMP")
-        names = extract_table_names(rewritten)
-        # bare unquoted paths (`FROM u.csv`) were already rewritten to
-        # temp views by rewrite_path_tables — Spark can't register a
-        # dotted temp-view name, so they never reach this point
-        hits = self.catalog.lookup(names)
-        for name, path in hits.items():
+        # bare unquoted paths (`FROM u.csv`) were rewritten to temp
+        # views too — Spark can't register a dotted temp-view name
+        names = [n for n in extract_table_names(rewritten) if n not in path_map]
+        for name, path in self.catalog.lookup(names).items():
             register_path(self.spark, name, path)
         if not names and not path_map:
             raise EmptyTableNameError("Table name is empty")
-        return rewritten
+        return self.spark.sql(rewritten.rstrip().rstrip(";"))
 
     # ---- public API ----
 
     def dataframe(self, sql: str) -> DataFrame:
         """DML → registered views → spark.sql DataFrame (uncapped)."""
-        sql_type = classify(sql)
-        if sql_type is not SQLType.DML:
+        if classify(sql) is not SQLType.DML:
             raise BadRequestError("Only queries produce DataFrames; got DDL")
-        rewritten = self._register_tables(sql)
-        return self.spark.sql(rewritten.rstrip().rstrip(";"))
+        return self._sql(sql)
 
     def query(self, sql: str) -> dict:
         """Interactive /fetch semantics: DML or DDL, stringified result."""
         t0 = time.time()
-        sql_type = classify(sql)
-        if sql_type is SQLType.DDL:
+        if classify(sql) is SQLType.DDL:
             result = self._handle_ddl(sql)
             result["query_time"] = round(time.time() - t0, 3)
             return result
         try:
-            df = self.dataframe(sql)
-            body = materialize(df, INTERACTIVE_LIMIT)
+            body = materialize(self._sql(sql), INTERACTIVE_LIMIT)
             self.catalog.record_query(sql, "successful")
         except Exception:
             self.catalog.record_query(sql, "fail")

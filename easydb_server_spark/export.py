@@ -4,6 +4,9 @@ Reference behavior (`src/controllers.rs:181-241`): uncapped result
 written to ``/tmp/easydb/query-{yyyymmddhhmmss}{ms}.{ext}``, then
 streamed back as a download.
 
+Deviation: a process-unique ``-{run}_{seq}`` suffix keeps two exports
+started in the same millisecond off one path (``PATH_ALREADY_EXISTS``).
+
 Deviation (documented, SURVEY.md §7.4 quirk 1): the reference's TSV
 export builds a tab-delimiter option but never passes it, producing
 comma-delimited ``.tsv`` files — we actually emit tabs.
@@ -27,6 +30,8 @@ import time
 
 from pyspark.sql import DataFrame
 
+from easydb_server_spark.sqlgate.parse import unique_id
+
 EXPORT_DIR = "/tmp/easydb"
 
 
@@ -42,7 +47,7 @@ def _csv_cell(value: str, sep: str) -> str:
 def _export_path(ext: str) -> str:
     ts = time.strftime("%Y%m%d%H%M%S") + f"{int(time.time() * 1000) % 1000:03d}"
     os.makedirs(EXPORT_DIR, exist_ok=True)
-    return os.path.join(EXPORT_DIR, f"query-{ts}.{ext}")
+    return os.path.join(EXPORT_DIR, f"query-{ts}-{unique_id()}.{ext}")
 
 
 def export_query(df: DataFrame, fmt: str, distributed: bool = False) -> str:

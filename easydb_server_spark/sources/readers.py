@@ -17,10 +17,12 @@ Globs are native to Spark's DataFrameReader for CSV/JSON/Parquet
 (A1–A3, A7); xlsx expands with ``glob.glob`` like the reference's
 ``find_files`` (`src/data_source/utils.rs:28-38`).
 
-Scale note: CSV/NdJSON listing + schema inference is a distributed
-scan; inferred schemas are cached per (path, mtime) so re-registration
-per request (the reference's fresh-session semantics) doesn't re-scan
-— the optimization the reference's roadmap asks for (SURVEY.md §7.4).
+Scale note: schema inference is a Spark job (a distributed scan for
+CSV/NdJSON, a footer read for parquet/ORC). Every Spark-native format
+caches its inferred schema per (path, change signature of the glob
+listing), so re-registration per request (the reference's
+fresh-session semantics) doesn't re-infer — the optimization the
+reference's roadmap asks for (SURVEY.md §7.4).
 """
 
 from __future__ import annotations
@@ -53,7 +55,7 @@ def resolve_path(path: str) -> str:
     return os.path.join(data_dir(), path)
 
 
-def _mtime_signature(resolved: str) -> tuple:
+def _mtime_signature(files: list[str]) -> tuple:
     """Change signature over the FULL glob listing: file count plus an
     order-sensitive digest of every (name, mtime, size). Constant-size
     key — a 10⁵-file glob costs one stat pass but no giant tuple — and
@@ -62,7 +64,6 @@ def _mtime_signature(resolved: str) -> tuple:
     same-size rename that preserves mtimes)."""
     import hashlib
 
-    files = sorted(_glob.glob(resolved)) or [resolved]
     h = hashlib.md5()
     for f in files:
         try:
@@ -73,18 +74,24 @@ def _mtime_signature(resolved: str) -> tuple:
     return (len(files), h.hexdigest())
 
 
-def _cached_schema(resolved: str, fmt: str, sig: tuple):
-    hit = _SCHEMA_CACHE.get((resolved, fmt))
-    if hit is not None and hit[0] == sig:
-        return hit[1]
-    return None
+# Spark-native formats → (reader source, options); ``inferSchema`` is
+# ignored once a cached schema is supplied
+_SPARK_FORMATS = {
+    DataSourceFormat.CSV: ("csv", {"header": True, "inferSchema": True}),
+    DataSourceFormat.TSV: ("csv", {"header": True, "inferSchema": True, "sep": "\t"}),
+    DataSourceFormat.NDJSON: ("json", {}),
+    DataSourceFormat.PARQUET: ("parquet", {}),
+    DataSourceFormat.ORC: ("orc", {}),
+}
 
 
 def read_path(spark: SparkSession, path: str) -> DataFrame:
     """Read a file/glob path into a DataFrame, routing by extension."""
     fmt = get_format(path)
     resolved = resolve_path(path)
-    if not _glob.glob(resolved) and not os.path.exists(resolved):
+    # a literal name with glob metacharacters (`a[1].csv`) matches itself
+    files = sorted(_glob.glob(resolved)) or ([resolved] if os.path.exists(resolved) else [])
+    if not files:
         raise NotFoundError(f"No files match path: {path!r}")
     if fmt == DataSourceFormat.JSON:
         raise UnsupportedFormatError("JSON files are currently not supported.")
@@ -93,30 +100,15 @@ def read_path(spark: SparkSession, path: str) -> DataFrame:
 
         return read_xlsx(spark, resolved)
 
-    sig = _mtime_signature(resolved)
-    cached_schema = _cached_schema(resolved, fmt.value, sig)
-
-    if fmt == DataSourceFormat.CSV or fmt == DataSourceFormat.TSV:
-        reader = spark.read.option("header", True)
-        if fmt == DataSourceFormat.TSV:
-            reader = reader.option("sep", "\t")
-        if cached_schema is not None:
-            df = reader.schema(cached_schema).csv(resolved)
-        else:
-            df = reader.option("inferSchema", True).csv(resolved)
-            _SCHEMA_CACHE[(resolved, fmt.value)] = (sig, df.schema)
-        return df
-    if fmt == DataSourceFormat.NDJSON:
-        if cached_schema is not None:
-            return spark.read.schema(cached_schema).json(resolved)
-        df = spark.read.json(resolved)
-        _SCHEMA_CACHE[(resolved, fmt.value)] = (sig, df.schema)
-        return df
-    if fmt == DataSourceFormat.PARQUET:
-        return spark.read.parquet(resolved)
-    if fmt == DataSourceFormat.ORC:
-        return spark.read.orc(resolved)
-    raise UnsupportedFormatError(f"Unsupported file format: {path!r}")
+    source, options = _SPARK_FORMATS[fmt]
+    reader = spark.read.format(source).options(**options)
+    sig = _mtime_signature(files)
+    hit = _SCHEMA_CACHE.get((resolved, fmt.value))
+    if hit is not None and hit[0] == sig:
+        return reader.schema(hit[1]).load(resolved)
+    df = reader.load(resolved)
+    _SCHEMA_CACHE[(resolved, fmt.value)] = (sig, df.schema)
+    return df
 
 
 def register_path(spark: SparkSession, name: str, path: str) -> DataFrame:

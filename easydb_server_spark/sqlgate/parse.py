@@ -251,12 +251,13 @@ _TEMP_SEQ = itertools.count()
 _TEMP_RUN = uuid.uuid4().hex[:8]
 
 
-def gen_temp_name() -> str:
-    """temp_{run_id}_{seq}: process-unique run token + monotonic
-    counter, collision-free across concurrent requests on the shared
-    SparkSession (the reference's temp_{unix_seconds}_{rand4},
-    `src/data_source/context.rs:103-111`, can collide within a second)."""
-    return f"temp_{_TEMP_RUN}_{next(_TEMP_SEQ)}"
+def unique_id() -> str:
+    """{run_id}_{seq}: process-unique run token + monotonic counter.
+    Temp names ``temp_{unique_id}`` are collision-free across concurrent
+    requests on the shared SparkSession (the reference's
+    temp_{unix_seconds}_{rand4}, `src/data_source/context.rs:103-111`,
+    can collide within a second)."""
+    return f"{_TEMP_RUN}_{next(_TEMP_SEQ)}"
 
 
 def rewrite_path_tables(sql: str) -> tuple[str, dict[str, str]]:
@@ -275,7 +276,7 @@ def rewrite_path_tables(sql: str) -> tuple[str, dict[str, str]]:
     last = 0
     for pos, raw_len, path in factors:
         if path not in path_to_name:
-            name = gen_temp_name()
+            name = f"temp_{unique_id()}"
             path_to_name[path] = name
             mapping[name] = path
         pieces.append(sql[last:pos])

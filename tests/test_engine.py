@@ -243,3 +243,53 @@ class TestParityBehaviors:
         assert parts
         rows = sum(len(open(p).read().splitlines()) - 1 for p in parts if open(p).read())
         assert rows == 3
+
+    def test_export_paths_unique_within_one_millisecond(self, tmp_path, monkeypatch):
+        """Two exports started in the same millisecond get distinct
+        files under the reference's query-{yyyymmddhhmmss}{ms} prefix."""
+        from easydb_server_spark import export as ex
+
+        monkeypatch.setattr(ex, "EXPORT_DIR", str(tmp_path))
+        monkeypatch.setattr(ex.time, "strftime", lambda fmt: "20250101120000")
+        monkeypatch.setattr(ex.time, "time", lambda: 1735732800.123)
+        a, b = ex._export_path("csv"), ex._export_path("csv")
+        assert a != b
+        assert all(p.startswith(str(tmp_path / "query-20250101120000123")) for p in (a, b))
+
+
+class TestRegistration:
+    """Each distinct source of a request is read and registered once."""
+
+    @pytest.fixture()
+    def registered(self, engine, monkeypatch):
+        import easydb_server_spark.engine as engine_mod
+
+        paths: list[str] = []
+        real = engine_mod.register_path
+
+        def counting(spark, name, path):
+            paths.append(path)
+            return real(spark, name, path)
+
+        monkeypatch.setattr(engine_mod, "register_path", counting)
+        return paths
+
+    def test_one_quoted_path(self, engine, registered):
+        assert engine.query("select * from 'user.csv'")["rows"]
+        assert registered == ["user.csv"]
+
+    def test_same_path_twice(self, engine, registered):
+        out = engine.query("select count(*) from 'user.csv' a join 'user.csv' b on a.id = b.id")
+        assert out["rows"] == [["3"]]
+        assert registered == ["user.csv"]
+
+    def test_cataloged_table_joined_with_path(self, engine, registered):
+        engine.query("create table user () location 'user.csv'")
+        out = engine.query("select count(*) from user u join 'order_1.csv' o on u.id = o.user_id")
+        assert out["rows"] == [["2"]]
+        assert sorted(registered) == ["order_1.csv", "user.csv"]
+
+    def test_export(self, engine, registered):
+        path = engine.export("select id from 'user.csv'", "csv")
+        assert len(open(path).read().splitlines()) == 4
+        assert registered == ["user.csv"]

@@ -77,13 +77,13 @@ class TestReaders:
 
         for i in range(5):
             (tmp_path / f"g_{i}.csv").write_text("a,b\n1,2\n")
-        pattern = str(tmp_path / "g_*.csv")
-        sig1 = _mtime_signature(pattern)
+        sig1 = _mtime_signature(sorted(map(str, tmp_path.glob("g_*.csv"))))
         os.rename(tmp_path / "g_2.csv", tmp_path / "g_29.csv")  # stays in glob
-        sig2 = _mtime_signature(pattern)
+        sig2 = _mtime_signature(sorted(map(str, tmp_path.glob("g_*.csv"))))
         assert sig1 != sig2
 
-    def test_schema_cache_invalidated_by_any_file_of_large_glob(self, spark, tmp_path, monkeypatch):
+    @pytest.mark.parametrize("ext", ["csv", "parquet"])
+    def test_schema_cache_invalidated_by_any_file_of_large_glob(self, spark, tmp_path, monkeypatch, ext):
         """The change signature covers the FULL listing: touching file
         #65+ of a glob must invalidate the cached inferred schema (the
         old signature stat'ed only the first 64 files). Also: one cache
@@ -91,23 +91,51 @@ class TestReaders:
         import os
         import time
 
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         from easydb_server_spark.sources import readers
 
+        def write(i: int, row: dict) -> None:
+            path = tmp_path / f"g_{i:03d}.{ext}"
+            if ext == "csv":
+                path.write_text(",".join(row) + "\n" + ",".join(map(str, row.values())) + "\n")
+            else:
+                pq.write_table(pa.table({k: [v] for k, v in row.items()}), path)
+
         monkeypatch.setenv("DATA_DIR", str(tmp_path))
+        key = (str(tmp_path / f"g_*.{ext}"), ext)
         for i in range(70):
-            (tmp_path / f"g_{i:03d}.csv").write_text("a,b\n1,x\n")
-        read_path(spark, "g_*.csv")
-        assert len([k for k in readers._SCHEMA_CACHE if k[0].endswith("g_*.csv")]) == 1
-        sig1 = readers._SCHEMA_CACHE[(str(tmp_path / "g_*.csv"), "csv")][0]
+            write(i, {"a": 1, "b": "x"})
+        read_path(spark, f"g_*.{ext}")
+        assert len([k for k in readers._SCHEMA_CACHE if k[0] == key[0]]) == 1
+        stale = readers._SCHEMA_CACHE[key]
+        assert read_path(spark, f"g_*.{ext}").count() == 70
+        assert readers._SCHEMA_CACHE[key] is stale  # same listing → cache hit
         # rewrite file #69 (alphabetically last, index > 64) with a new column
         time.sleep(0.01)
-        (tmp_path / "g_069.csv").write_text("a,b,c\n1,x,9\n")
-        os.utime(tmp_path / "g_069.csv")
-        df = read_path(spark, "g_*.csv")
-        sig2 = readers._SCHEMA_CACHE[(str(tmp_path / "g_*.csv"), "csv")][0]
-        assert sig1 != sig2  # stale schema evicted, fresh inference ran
-        assert len([k for k in readers._SCHEMA_CACHE if k[0].endswith("g_*.csv")]) == 1
-        assert "c" in df.columns
+        write(69, {"a": 1, "b": "x", "c": 9})
+        os.utime(tmp_path / f"g_069.{ext}")
+        df = read_path(spark, f"g_*.{ext}")
+        sig2, schema2 = readers._SCHEMA_CACHE[key]
+        assert sig2 != stale[0] and schema2 is not stale[1]  # stale schema evicted, fresh inference ran
+        assert len([k for k in readers._SCHEMA_CACHE if k[0] == key[0]]) == 1
+        if ext == "csv":
+            # parquet infers from one file's footer, so only CSV's
+            # full-scan inference is sure to see the new column
+            assert "c" in df.columns
+
+    def test_parquet_cached_schema_reads_same_rows(self, spark):
+        """A cache hit reads with the schema the miss inferred and
+        returns the same rows, timestamps included."""
+        from easydb_server_spark.sources import readers
+
+        path = f"{SF_DIR}/events.parquet"
+        readers._SCHEMA_CACHE.pop((path, "parquet"), None)
+        miss = read_path(spark, path)
+        hit = read_path(spark, path)
+        assert readers._SCHEMA_CACHE[(path, "parquet")][1] == miss.schema == hit.schema
+        assert hit.orderBy("event_id").collect() == miss.orderBy("event_id").collect()
 
 
 class TestExcel:
